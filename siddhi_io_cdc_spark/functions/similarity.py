@@ -25,7 +25,14 @@ from itertools import combinations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from siddhi_io_cdc_spark.util import fan_out, scoped_persist, tag_caches
+from siddhi_io_cdc_spark.util import (
+    _hadoop_delete,
+    _hadoop_read_text,
+    _hadoop_write_text,
+    fan_out,
+    scoped_persist,
+    tag_caches,
+)
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -410,7 +417,6 @@ def write_ivf_index(
         # compaction); each changelog batch appends O(batch) deltas +
         # tombstones instead of rewriting touched cells — see
         # streaming/mor.py for why that matters once touched-cells ~ nlist
-        from siddhi_io_cdc_spark.streaming.ivf_index import _hadoop_delete
         from siddhi_io_cdc_spark.streaming.mor import mor_init
 
         assigned.write.mode("overwrite").partitionBy("cell").parquet(
@@ -432,37 +438,6 @@ def write_ivf_index(
         json.dumps([[float(x) for x in c] for c in centroids]),
     )
     return centroids
-
-
-def _hadoop_write_text(spark, path: str, text: str) -> None:
-    """Write a small text file through the Hadoop FileSystem API — resolves
-    against the session's Hadoop conf, so s3a://, hdfs://, and file:// paths
-    all work (builtin open() only handles the local filesystem)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    out = fs.create(hpath, True)
-    try:
-        out.write(bytearray(text.encode("utf-8")))
-    finally:
-        out.close()
-
-
-def _hadoop_read_text(spark, path: str) -> str:
-    """Read a small text file through the Hadoop FileSystem API (companion
-    of :func:`_hadoop_write_text`)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    stream = fs.open(hpath)
-    try:
-        # Read JVM-side: py4j passes byte[] buffers by VALUE, so the
-        # stream.read(buf) idiom silently returns nothing to Python.
-        return jvm.org.apache.commons.io.IOUtils.toString(
-            stream, jvm.java.nio.charset.StandardCharsets.UTF_8
-        )
-    finally:
-        stream.close()
 
 
 def probe_ivf_index(
@@ -1372,7 +1347,6 @@ def write_ivfpq_index(
     )
     spark = df.sparkSession
     if layout == "mor":
-        from siddhi_io_cdc_spark.streaming.ivf_index import _hadoop_delete
         from siddhi_io_cdc_spark.streaming.mor import mor_init
 
         assigned.write.mode("overwrite").partitionBy("cell").parquet(

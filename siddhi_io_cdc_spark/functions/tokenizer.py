@@ -237,7 +237,7 @@ def save_bpe_model(spark, merges: DataFrame | Sequence[tuple], path: str) -> Non
     A merge table is n_merges rows — a model, not a data path."""
     import json
 
-    from siddhi_io_cdc_spark.functions.similarity import _hadoop_write_text
+    from siddhi_io_cdc_spark.util import _hadoop_write_text
 
     if isinstance(merges, DataFrame):
         rows = [
@@ -262,7 +262,7 @@ def load_bpe_model(spark, path: str) -> list[tuple[str, str]]:
     ``(left, right)`` list :func:`bpe_encode` consumes."""
     import json
 
-    from siddhi_io_cdc_spark.functions.similarity import _hadoop_read_text
+    from siddhi_io_cdc_spark.util import _hadoop_read_text
 
     model = json.loads(_hadoop_read_text(spark, path))
     if model.get("kind") != "bpe":

@@ -481,7 +481,7 @@ def save_unigram_model(spark, pieces: DataFrame, path: str) -> None:
     (the collect is the piece table itself)."""
     import json
 
-    from siddhi_io_cdc_spark.functions.similarity import _hadoop_write_text
+    from siddhi_io_cdc_spark.util import _hadoop_write_text
 
     rows = [
         [r["piece"], int(r["piece_count"]), float(r["logprob"])]
@@ -500,7 +500,7 @@ def load_unigram_model(
     the full table for ``broadcast_vocab=True`` encoding."""
     import json
 
-    from siddhi_io_cdc_spark.functions.similarity import _hadoop_read_text
+    from siddhi_io_cdc_spark.util import _hadoop_read_text
 
     model = json.loads(_hadoop_read_text(spark, path))
     if model.get("kind") != "unigram_lm":

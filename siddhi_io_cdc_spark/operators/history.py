@@ -23,15 +23,20 @@ any size joins against any depth of history without a range explosion.
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from siddhi_io_cdc_spark.operators.mutate import rekey_deletes
+from siddhi_io_cdc_spark.operators.mutate import (
+    BUCKET_COL,
+    recover_partitions,
+    rekey_deletes,
+    replace_partitions,
+    touched_partitions,
+)
+from siddhi_io_cdc_spark.util import persisted
 
 __all__ = [
     "changelog_history",
@@ -102,8 +107,9 @@ def merge_history_into_parquet(
     mutation store. Per batch: (1) read ONLY the buckets the batch's keys
     hash into, (2) convert those stored versions back to events (a version
     IS its opening event: ``valid_from`` = seq, tombstone = delete), (3)
-    re-derive history over old+new events for the touched keys, (4) rewrite
-    only those buckets. Versions are deduplicated on ``(key, valid_from)``
+    re-derive history over old+new events for the touched keys, (4) swap
+    only those buckets in (:func:`...mutate.replace_partitions`, one file
+    per bucket). Versions are deduplicated on ``(key, valid_from)``
     first, which makes replay after a checkpoint restart idempotent.
 
     I/O per batch is O(touched buckets + batch); the per-key re-derivation
@@ -136,40 +142,34 @@ def merge_history_into_parquet(
             op_col=op_col,
             value_cols=list(value_cols),
         )
-        return h.withColumn("__bucket", bucket_expr)
+        return h.withColumn(BUCKET_COL, bucket_expr)
 
     if not os.path.exists(target_path):
-        _derive(new_events).write.partitionBy("__bucket").parquet(target_path)
+        _derive(new_events).repartition(BUCKET_COL).write.partitionBy(BUCKET_COL).parquet(
+            target_path
+        )
         return
 
-    touched = [r[0] for r in new_events.select(bucket_expr.alias("b")).distinct().collect()]
-    # mergeSchema: survives additive evolution of the value columns (same
-    # single-footer-sample hazard as the bucketed merge store).
-    stored = (
-        spark.read.option("mergeSchema", "true").parquet(target_path)
-        .where(F.col("__bucket").isin(touched))
-        .drop("__bucket")
-    )
-    # A stored version is its opening event; tombstones were deletes.
-    old_events = stored.select(
-        *keys,
-        *value_cols,
-        F.when(F.col("is_deleted"), F.lit("delete")).otherwise(F.lit("insert")).alias("__op"),
-        F.col("valid_from").alias("__seq"),
-    )
-    merged = _derive(old_events.unionByName(new_events))
-    staging = target_path + ".stage-" + uuid.uuid4().hex
-    merged.write.partitionBy("__bucket").parquet(staging)
-    try:
-        (
-            spark.read.parquet(staging)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__bucket")
-            .parquet(target_path)
+    recover_partitions(spark, target_path)
+    with persisted(new_events) as new_events:
+        touched = touched_partitions(new_events, bucket_expr)
+        # mergeSchema: survives additive evolution of the value columns (same
+        # single-footer-sample hazard as the bucketed merge store).
+        stored = (
+            spark.read.option("mergeSchema", "true").parquet(target_path)
+            .where(F.col(BUCKET_COL).isin(touched))
+            .drop(BUCKET_COL)
         )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+        # A stored version is its opening event; tombstones were deletes.
+        old_events = stored.select(
+            *keys,
+            *value_cols,
+            F.when(F.col("is_deleted"), F.lit("delete")).otherwise(F.lit("insert")).alias("__op"),
+            F.col("valid_from").alias("__seq"),
+        )
+        replace_partitions(
+            spark, target_path, BUCKET_COL, touched, _derive(old_events.unionByName(new_events))
+        )
 
 
 def foreach_batch_history(

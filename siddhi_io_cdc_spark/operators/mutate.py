@@ -27,6 +27,14 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from siddhi_io_cdc_spark.util import (
+    _fs,
+    _hadoop_delete,
+    _hadoop_list_dirs,
+    _hadoop_renamer,
+    persisted,
+)
+
 
 def insert_into(target: DataFrame, source: DataFrame) -> DataFrame:
     """Q1: append stream rows to the table (column-aligned union)."""
@@ -223,6 +231,78 @@ def merge_into_parquet(
 BUCKET_COL = "__bucket"
 
 
+def recover_partitions(spark, path: str) -> None:
+    """Undo an interrupted :func:`replace_partitions` beside ``path``: a
+    partition parked in a ``.swap-*`` sibling and missing from the store is
+    renamed back, then the ``.swap-*`` / ``.stage-*`` siblings are deleted.
+    Call before reading the store, or the merge misses the parked rows."""
+    path = path.rstrip("/")
+    parent, base = path.rsplit("/", 1) if "/" in path else (".", path)
+    for d in _hadoop_list_dirs(spark, parent):
+        if d.startswith(base + ".swap-"):
+            swap = f"{parent}/{d}"
+            live = set(_hadoop_list_dirs(spark, path))
+            rename = _hadoop_renamer(spark, path)
+            for part in _hadoop_list_dirs(spark, swap):
+                if part not in live:
+                    rename(f"{swap}/{part}", f"{path}/{part}")
+            _hadoop_delete(spark, swap)
+        elif d.startswith(base + ".stage-"):
+            _hadoop_delete(spark, f"{parent}/{d}")
+
+
+def touched_partitions(df: DataFrame, part: Column) -> list:
+    """The distinct non-null values of the partition id ``part`` over ``df``
+    (at most one row per partition: a driver-safe collect)."""
+    return [r[0] for r in df.select(part.alias("p")).distinct().collect() if r[0] is not None]
+
+
+def replace_partitions(
+    spark, path: str, part_col: str, touched: Sequence[int], replacement: DataFrame
+) -> None:
+    """Commit a merge: ``replacement`` (carrying ``part_col``, holding rows
+    of ``touched`` partitions only) becomes their whole content.
+
+    ``replacement`` is written once, repartitioned on ``part_col``, to a
+    ``.stage-<uuid>`` sibling (one task and one file per partition); then
+    each touched partition is swapped in by two same-filesystem renames,
+    live directory to a ``.swap-<uuid>`` sibling and staged directory into
+    its place. A touched partition with no staged rows is removed; a store
+    left with none keeps one zero-row partition so its schema stays
+    readable. ``replacement`` may lazily read the partitions it replaces:
+    it is fully staged before the first rename. A crash mid-swap leaves
+    every partition live or parked for :func:`recover_partitions`.
+    """
+    if not touched:
+        return
+    path = path.rstrip("/")
+    token = uuid.uuid4().hex
+    stage, swap = f"{path}.stage-{token}", f"{path}.swap-{token}"
+    replacement.repartition(part_col).write.partitionBy(part_col).parquet(stage)
+    try:
+        prefix = part_col + "="
+        staged = {d for d in _hadoop_list_dirs(spark, stage) if d.startswith(prefix)}
+        parts = {f"{prefix}{b}" for b in touched}
+        if not staged <= parts:
+            raise ValueError(f"{path}: rows outside the touched partitions {staged - parts}")
+        live = {d for d in _hadoop_list_dirs(spark, path) if d.startswith(prefix)}
+        fs, hswap, _ = _fs(spark, swap)
+        fs.mkdirs(hswap)
+        rename = _hadoop_renamer(spark, path)
+        for d in sorted(parts):
+            if d in live:
+                rename(f"{path}/{d}", f"{swap}/{d}")
+            if d in staged:
+                rename(f"{stage}/{d}", f"{path}/{d}")
+        if not (live - parts) | staged:
+            spark.createDataFrame([], replacement.drop(part_col).schema).write.parquet(
+                f"{path}/{prefix}0"
+            )
+        _hadoop_delete(spark, swap)
+    finally:
+        _hadoop_delete(spark, stage)
+
+
 def merge_into_bucketed_parquet(
     spark,
     target_path: str,
@@ -236,15 +316,22 @@ def merge_into_bucketed_parquet(
 ) -> None:
     """Partition-pruned merge: the scale-correct parquet mutation store.
 
-    The table is laid out hash-bucketed on the merge key
-    (``{target}/__bucket=k/``). A micro-batch touches only the buckets its
-    keys hash into, so per batch we: (1) read ONLY those partitions
-    (partition pruning on the bucket column), (2) apply the changelog to
-    that slice, (3) rewrite ONLY those partitions via dynamic partition
-    overwrite. I/O per batch is O(touched buckets), not O(table) — the plain
-    -parquet equivalent of a lakehouse ``MERGE INTO``; with Delta/Iceberg
-    this whole function collapses into their merge statement behind the same
-    call signature.
+    The table is laid out hash-bucketed on the merge key, one parquet file
+    per bucket (``{target}/__bucket=k/``). A micro-batch touches only the
+    buckets its keys hash into, so per batch we: (1) read ONLY those
+    partitions (partition pruning on the bucket column), (2) apply the
+    changelog to that slice, (3) swap ONLY those partitions in with
+    :func:`replace_partitions` (a bucket whose rows were all deleted is
+    removed). I/O per batch is O(touched buckets), not O(table) — the
+    plain-parquet equivalent of a lakehouse ``MERGE INTO``; with
+    Delta/Iceberg this whole function collapses into their merge statement
+    behind the same call signature. The batch is persisted for the call, so
+    a streaming source is read once, not once per scan.
+
+    Crash recovery: before reading, :func:`recover_partitions` restores a
+    bucket an interrupted swap left parked in a ``.swap-*`` sibling and
+    deletes leftover ``.swap-*`` / ``.stage-*`` siblings, so replaying the
+    batch converges.
     """
     keys = list(key)
     # Touched-bucket discovery must see the REAL delete keys (they live in
@@ -257,61 +344,33 @@ def merge_into_bucketed_parquet(
             table_columns = [
                 c for c in batch_df.columns if c not in meta and not c.startswith("before_")
             ]
-        empty = spark.createDataFrame([], batch_df.select(*table_columns).schema)
+        # limit(0), not an empty createDataFrame: the optimizer knows it is
+        # empty and prunes the anti-join, so the batch is scanned once.
+        empty = batch_df.select(*table_columns).limit(0)
         merged = apply_changelog(empty, batch_df, key=keys, seq_col=seq_col, op_col=op_col)
-        merged.withColumn(BUCKET_COL, bucket_expr).write.partitionBy(BUCKET_COL).parquet(
-            target_path
-        )
+        merged.withColumn(BUCKET_COL, bucket_expr).repartition(BUCKET_COL).write.partitionBy(
+            BUCKET_COL
+        ).parquet(target_path)
         return
 
-    touched = [
-        r[0] for r in batch_df.select(bucket_expr.alias("b")).distinct().collect()
-    ]  # ≤ num_buckets small ints — a driver-safe collect
-    # mergeSchema: after additive evolution, buckets untouched since the
-    # evolution lack the new column in their footers; a single-footer sample
-    # would silently DROP that column (and a later merge would then erase its
-    # values). The union schema costs one footer read per file of the pruned
-    # buckets only.
-    target = (
-        spark.read.option("mergeSchema", "true").parquet(target_path)
-        .where(F.col(BUCKET_COL).isin(touched))  # partition-pruned scan
-        .drop(BUCKET_COL)
-    )
-    if evolve:
-        target, batch_df = evolve_target_schema(target, batch_df, op_col=op_col)
-    merged = apply_changelog(target, batch_df, key=keys, seq_col=seq_col, op_col=op_col)
-    # Stage the merged buckets first: Spark cannot overwrite partitions it is
-    # lazily reading from (self-overwrite). The staging write is O(touched
-    # buckets), so the partition-pruned cost model holds.
-    staging = target_path + ".stage-" + uuid.uuid4().hex
-    merged.withColumn(BUCKET_COL, bucket_expr).write.partitionBy(BUCKET_COL).parquet(staging)
-    try:
-        present = {
-            int(os.path.basename(d).split("=", 1)[1])
-            for d in (os.listdir(staging) if os.path.isdir(staging) else [])
-            if d.startswith(BUCKET_COL + "=")
-        }
-        if present:
-            (
-                spark.read.parquet(staging)
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(BUCKET_COL)
-                .parquet(target_path)
-            )
-        # Dynamic overwrite cannot write an EMPTY partition: a bucket whose
-        # rows were all deleted keeps its stale files. Drop those directories.
-        for b in set(touched) - present:
-            shutil.rmtree(os.path.join(target_path, f"{BUCKET_COL}={b}"), ignore_errors=True)
-        # A fully-emptied store must stay readable: keep one zero-row bucket
-        # dir so the parquet schema survives.
-        if not any(d.startswith(BUCKET_COL + "=") for d in os.listdir(target_path)):
-            # No lineage to the (now-deleted) target files: fresh empty frame.
-            spark.createDataFrame([], merged.schema).write.parquet(
-                os.path.join(target_path, f"{BUCKET_COL}=0")
-            )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+    recover_partitions(spark, target_path)
+    with persisted(batch_df) as batch_df:
+        touched = touched_partitions(batch_df, bucket_expr)
+        # mergeSchema: after additive evolution, buckets untouched since the
+        # evolution lack the new column in their footers; a single-footer
+        # sample would silently DROP that column (and a later merge would
+        # then erase its values).
+        target = (
+            spark.read.option("mergeSchema", "true").parquet(target_path)
+            .where(F.col(BUCKET_COL).isin(touched))  # partition-pruned scan
+            .drop(BUCKET_COL)
+        )
+        if evolve:
+            target, batch_df = evolve_target_schema(target, batch_df, op_col=op_col)
+        merged = apply_changelog(target, batch_df, key=keys, seq_col=seq_col, op_col=op_col)
+        replace_partitions(
+            spark, target_path, BUCKET_COL, touched, merged.withColumn(BUCKET_COL, bucket_expr)
+        )
 
 
 def read_bucketed_store(spark, target_path: str) -> DataFrame:
@@ -342,16 +401,19 @@ def foreach_batch_bucketed_merge(
 
 
 def _recover_interrupted_swap(target_path: str) -> None:
-    """If a crash left ``.old-*`` behind with no live target, restore it."""
-    if os.path.exists(target_path):
-        return
+    """Recover a whole-directory swap (``target -> .old-*``, then
+    ``.tmp-* -> target``) that a crash interrupted. Between the renames the
+    target is missing and the ``.old-*`` sibling is still its complete
+    previous state: restore it. Stale ``.tmp-*`` / extra ``.old-*``
+    siblings are garbage either way and are removed."""
     parent, base = os.path.split(target_path)
     if not os.path.isdir(parent):
         return
-    leftovers = sorted(d for d in os.listdir(parent) if d.startswith(base + ".old-"))
-    if leftovers:
-        os.rename(os.path.join(parent, leftovers[0]), target_path)
-        for d in leftovers[1:]:
+    olds = sorted(d for d in os.listdir(parent) if d.startswith(base + ".old-"))
+    if not os.path.exists(target_path) and olds:
+        os.rename(os.path.join(parent, olds[0]), target_path)
+    for d in os.listdir(parent):
+        if d.startswith((base + ".old-", base + ".tmp-")):
             shutil.rmtree(os.path.join(parent, d), ignore_errors=True)
 
 

@@ -49,13 +49,19 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from siddhi_io_cdc_spark.functions.text import normalize_text
-from siddhi_io_cdc_spark.functions.similarity import _hadoop_read_text
-from siddhi_io_cdc_spark.streaming.ivf_index import (
+from siddhi_io_cdc_spark.operators.mutate import (
+    recover_partitions,
+    rekey_deletes,
+    replace_partitions,
+    touched_partitions,
+)
+from siddhi_io_cdc_spark.streaming.ivf_index import _marker_path
+from siddhi_io_cdc_spark.util import (
     _hadoop_delete,
     _hadoop_exists,
-    _hadoop_list_dirs,
+    _hadoop_read_text,
     _hadoop_write_text,
-    _marker_path,
+    persisted,
 )
 
 TBUCKET_COL = "tbucket"
@@ -214,40 +220,6 @@ def read_bm25_stats(spark, index_path: str) -> tuple[int, int]:
     return n, t
 
 
-def _merge_partitioned(
-    spark,
-    path: str,
-    part_col: str,
-    touched: list[int],
-    replacement: DataFrame,
-) -> None:
-    """Replace the touched partitions of ``path`` with ``replacement``
-    (already carrying ``part_col``): stage → dynamic partition overwrite →
-    drop emptied partition dirs. Same shape as the IVF applier's swap."""
-    import uuid
-
-    staging = path + ".stage-" + uuid.uuid4().hex
-    replacement.write.partitionBy(part_col).parquet(staging)
-    try:
-        present = {
-            int(d.split("=", 1)[1])
-            for d in _hadoop_list_dirs(spark, staging)
-            if d.startswith(part_col + "=")
-        }
-        if present:
-            (
-                spark.read.parquet(staging)
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(part_col)
-                .parquet(path)
-            )
-        for b in set(touched) - present:
-            _hadoop_delete(spark, path + f"/{part_col}={b}")
-    finally:
-        _hadoop_delete(spark, staging)
-
-
 def apply_changelog_bm25(
     spark,
     index_path: str,
@@ -272,8 +244,6 @@ def apply_changelog_bm25(
     """
     import json as _json
 
-    from siddhi_io_cdc_spark.operators.mutate import rekey_deletes
-
     base = index_path.rstrip("/")
     if batch_id is not None and _hadoop_exists(spark, _marker_path(base, batch_id)):
         return None
@@ -291,6 +261,24 @@ def apply_changelog_bm25(
             seq_col, op_col, batch_id, expect_epoch,
         )
 
+    # The batch feeds the before-image checks, both touched-bucket collects
+    # and both merges: read it once.
+    recover_partitions(spark, base + "/postings")
+    recover_partitions(spark, base + "/docs")
+    with persisted(batch_df) as batch_df:
+        _apply_bm25_cow(
+            spark, batch_df, base, nbuckets, doc_buckets, text_col, id_col, seq_col, op_col
+        )
+
+    _write_stats(spark, base)
+    if batch_id is not None:
+        _hadoop_write_text(spark, _marker_path(base, batch_id), "done")
+
+
+def _apply_bm25_cow(
+    spark, batch_df, base, nbuckets, doc_buckets, text_col, id_col, seq_col, op_col,
+) -> None:
+    """Copy-on-write apply: swap in the touched postings and doc buckets."""
     before_text = f"before_{text_col}"
     moving_ops = ("update", "delete")
     movers = batch_df.where(F.col(op_col).isin(*moving_ops))
@@ -339,11 +327,7 @@ def apply_changelog_bm25(
         # IVF applier's old_cells.
         old_terms = _doc_terms(movers, before_text, id_col)
         parts.append(old_terms.select(_tbucket(F.col("term"), nbuckets).alias("b")))
-    touched_t = [
-        r[0]
-        for r in reduce(lambda a, b: a.unionByName(b), parts).distinct().collect()
-        if r[0] is not None
-    ]
+    touched_t = touched_partitions(reduce(lambda a, b: a.unionByName(b), parts), F.col("b"))
     batch_ids = latest.select(F.col(id_col).alias("doc_id")).distinct()
 
     if touched_t:
@@ -360,7 +344,7 @@ def apply_changelog_bm25(
         # Drop every surviving posting of the batch's docs (anti-join on the
         # doc id — covers removed terms), then add the new rows.
         kept = target.join(F.broadcast(batch_ids), "doc_id", "left_anti")
-        _merge_partitioned(
+        replace_partitions(
             spark,
             base + "/postings",
             TBUCKET_COL,
@@ -385,25 +369,18 @@ def apply_changelog_bm25(
             DBUCKET_COL, F.pmod(F.xxhash64(F.col("doc_id")), F.lit(doc_buckets)).cast("int")
         )
     )
-    touched_d = [
-        r[0]
-        for r in batch_ids.select(
-            F.pmod(F.xxhash64(F.col("doc_id")), F.lit(doc_buckets)).cast("int").alias("b")
-        ).distinct().collect()
-    ]
+    touched_d = touched_partitions(
+        batch_ids, F.pmod(F.xxhash64(F.col("doc_id")), F.lit(doc_buckets)).cast("int")
+    )
     if touched_d:
         dtarget = (
             spark.read.parquet(base + "/docs")
             .where(F.col(DBUCKET_COL).isin(touched_d))
         )
         dkept = dtarget.join(F.broadcast(batch_ids), "doc_id", "left_anti")
-        _merge_partitioned(
+        replace_partitions(
             spark, base + "/docs", DBUCKET_COL, touched_d, dkept.unionByName(new_dl)
         )
-
-    _write_stats(spark, base)
-    if batch_id is not None:
-        _hadoop_write_text(spark, _marker_path(base, batch_id), "done")
 
 
 def _apply_bm25_mor(

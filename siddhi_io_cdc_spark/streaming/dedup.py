@@ -4,8 +4,10 @@ The batch operator (``functions/dedup.py:minhash_lsh_pairs``) needs the whole
 corpus in one frame; a CDC document stream needs each micro-batch's near-dup
 pairs against everything seen so far WITHOUT rescanning the corpus. This
 module keeps a bucket-partitioned LSH index on disk, mirroring the bucketed
-merge-store pattern (``operators/mutate.py:merge_into_bucketed_parquet`` /
-``operators/history.py``):
+merge-store layout (``operators/mutate.py:merge_into_bucketed_parquet`` /
+``operators/history.py``). Unlike those stores it never rewrites a bucket
+per batch (no ``operators/mutate.py:replace_partitions`` swap): batches
+append, and ``compact_lsh_index`` folds the appends.
 
 - ``{store}/bands`` — rows ``(doc_id, band, bkey)`` partitioned by
   ``__bucket = pmod(xxhash64(band, bkey), num_buckets)``. A new batch probes
@@ -48,38 +50,10 @@ from siddhi_io_cdc_spark.functions.dedup import (
     minhash_prep,
     verify_jaccard_pairs,
 )
+from siddhi_io_cdc_spark.operators.mutate import _recover_interrupted_swap
 from siddhi_io_cdc_spark.util import scoped_persist
 
 BUCKET_COL = "__bucket"
-
-
-def _recover_interrupted_compact(sub: str) -> None:
-    """Restore an index subdirectory a crashed :func:`compact_lsh_index`
-    left missing.
-
-    The compaction swap is two renames (``sub -> .old-*`` then
-    ``.tmp-* -> sub``); a crash between them leaves ``sub`` absent, which
-    the probe path would silently read as an EMPTY index — permanently
-    missing every historical pair. Same marker-free recovery contract as
-    ``operators/mutate.py:_recover_interrupted_swap``: if the live dir is
-    missing but a ``.old-*`` sibling survives, the old dir is still the
-    complete pre-compaction index — restore it. Stale ``.tmp-*`` / extra
-    ``.old-*`` siblings are garbage either way and are removed.
-    """
-    import shutil
-
-    parent, base = os.path.split(sub)
-    if not os.path.isdir(parent):
-        return
-    olds = sorted(d for d in os.listdir(parent) if d.startswith(base + ".old-"))
-    if not os.path.exists(sub) and olds:
-        os.rename(os.path.join(parent, olds[0]), sub)
-        olds = olds[1:]
-    for d in olds:
-        shutil.rmtree(os.path.join(parent, d), ignore_errors=True)
-    for d in os.listdir(parent):
-        if d.startswith(base + ".tmp-"):
-            shutil.rmtree(os.path.join(parent, d), ignore_errors=True)
 
 
 def _bands_path(store: str) -> str:
@@ -139,8 +113,8 @@ def incremental_minhash_pairs(
 
     # --- cross pairs: probe the persisted index, partition-pruned ----------
     bands_path, docs_path = _bands_path(store_path), _docs_path(store_path)
-    _recover_interrupted_compact(bands_path)
-    _recover_interrupted_compact(docs_path)
+    _recover_interrupted_swap(bands_path)
+    _recover_interrupted_swap(docs_path)
     if os.path.exists(bands_path):
         touched = [
             r[0] for r in banded.select(band_bucket.alias("b")).distinct().collect()
@@ -305,7 +279,7 @@ def incremental_embedding_pairs(
     pairs = _pairs(b, b)
 
     vecs_path = os.path.join(store_path, "vecs")
-    _recover_interrupted_compact(vecs_path)
+    _recover_interrupted_swap(vecs_path)
     if os.path.exists(vecs_path):
         touched = [r[0] for r in b.select(part_col.alias("p")).distinct().collect()]
         new_ids = b.select("__id").distinct()
@@ -346,9 +320,8 @@ def compact_lsh_index(spark, store_path: str) -> None:
     append left behind (making the read-side dedup a no-op again), writes to
     a sibling staging directory, and swaps via renames. A crash between the
     two renames leaves the live dir missing — recovered on the next
-    compaction OR probe by :func:`_recover_interrupted_compact` (the
-    ``.old-*`` sibling is the complete pre-compaction index), the same
-    contract as ``operators/mutate.py:_recover_interrupted_swap``. Run it as
+    compaction OR probe by ``operators/mutate.py:_recover_interrupted_swap``
+    (the ``.old-*`` sibling is the complete pre-compaction index). Run it as
     a maintenance job between batches (the index is append-only, so any
     consistent snapshot compacts safely).
     """
@@ -360,7 +333,7 @@ def compact_lsh_index(spark, store_path: str) -> None:
         _docs_path(store_path),
         os.path.join(store_path, "vecs"),
     ):
-        _recover_interrupted_compact(sub)
+        _recover_interrupted_swap(sub)
         if not os.path.exists(sub):
             continue
         df = spark.read.parquet(sub)

@@ -45,16 +45,16 @@ from siddhi_io_cdc_spark.functions.export import (
     _dsir_score,
     dsir_hashed_grams,
 )
-from siddhi_io_cdc_spark.functions.similarity import (
-    _hadoop_read_text,
-    _hadoop_write_text,
-)
 from siddhi_io_cdc_spark.streaming.sketch import (
     _META,
     _already_applied,
     _commit_state,
     _guard_before_image,
     _state_df,
+)
+from siddhi_io_cdc_spark.util import (
+    _hadoop_read_text,
+    _hadoop_write_text,
 )
 
 

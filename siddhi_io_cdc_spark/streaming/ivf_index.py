@@ -11,8 +11,9 @@ Composes the two existing patterns:
   rebuild over the current table state — pinned by
   ``tests/test_ivf_maintenance.py``);
 - the partition-pruned merge of ``operators/mutate.py:
-  merge_into_bucketed_parquet`` (read only touched partitions, stage, swap
-  via dynamic partition overwrite, clear emptied partitions), with one
+  merge_into_bucketed_parquet`` (read only touched partitions, then
+  ``replace_partitions``: stage one file per cell, rename each touched cell
+  into place, remove emptied cells), with one
   IVF-specific twist: the partition key is SEMANTIC — ``cell =
   ivf_assign(embedding)`` — so an update can MOVE a row between
   partitions. The touched set is therefore cells of the AFTER images plus
@@ -34,46 +35,26 @@ index can live on s3a:// / hdfs:// as well as local paths.
 from __future__ import annotations
 
 import json
-import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from siddhi_io_cdc_spark.functions.similarity import (
+from siddhi_io_cdc_spark.functions.similarity import ivf_assign
+from siddhi_io_cdc_spark.operators.mutate import (
+    apply_changelog,
+    recover_partitions,
+    rekey_deletes,
+    replace_partitions,
+    touched_partitions,
+)
+from siddhi_io_cdc_spark.util import (
+    _hadoop_exists,
     _hadoop_read_text,
     _hadoop_write_text,
-    ivf_assign,
+    persisted,
 )
-from siddhi_io_cdc_spark.operators.mutate import apply_changelog
 
 CELL_COL = "cell"
-
-
-def _fs(spark, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath, jvm
-
-
-def _hadoop_exists(spark, path: str) -> bool:
-    fs, hpath, _ = _fs(spark, path)
-    return fs.exists(hpath)
-
-
-def _hadoop_delete(spark, path: str) -> None:
-    fs, hpath, _ = _fs(spark, path)
-    fs.delete(hpath, True)
-
-
-def _hadoop_list_dirs(spark, path: str) -> list[str]:
-    fs, hpath, _ = _fs(spark, path)
-    if not fs.exists(hpath):
-        return []
-    return [
-        s.getPath().getName()
-        for s in fs.listStatus(hpath)
-        if s.isDirectory()
-    ]
 
 
 def _marker_path(index_path: str, batch_id) -> str:
@@ -140,6 +121,19 @@ def apply_changelog_ivf(
             id_col, seq_col, op_col, batch_id, expect_epoch,
         )
 
+    # The batch feeds the before-image checks, the touched-cell collect and
+    # the merge: read it once.
+    recover_partitions(spark, index_path)
+    with persisted(batch_df) as batch_df:
+        _apply_ivf_cow(spark, index_path, batch_df, centroids, vec_col, id_col, seq_col, op_col)
+    if batch_id is not None:
+        _hadoop_write_text(spark, _marker_path(index_path, batch_id), "done")
+
+
+def _apply_ivf_cow(
+    spark, index_path, batch_df, centroids, vec_col, id_col, seq_col, op_col,
+) -> None:
+    """Copy-on-write apply: swap in the touched cells."""
     before_vec = f"before_{vec_col}"
     has_old_image = before_vec in batch_df.columns
     moving_ops = ("update", "delete")
@@ -155,14 +149,25 @@ def apply_changelog_ivf(
                 "the stream with the update projection (before_ prefix)."
             )
 
+    # Stamp the after images with their cells BEFORE the merge, as for
+    # pq_code: surviving stored rows keep the cell they live in. Recomputing
+    # it could move a row into an untouched cell (the build's numpy engine
+    # can put a near-tie vector one cell over from ivf_assign).
+    batch_df = batch_df.withColumn(
+        CELL_COL,
+        F.when(F.col(op_col) != "delete", ivf_assign(F.col(vec_col), centroids)),
+    )
+    upserts = batch_df.where(F.col(op_col) != "delete")
+    if upserts.where(F.col(CELL_COL).isNull()).limit(1).count():
+        raise ValueError(
+            f"batch upserts rows with a NULL '{vec_col}': such a row has no "
+            "cell to live in. Pre-filter them or emit them as deletes."
+        )
+
     # Touched cells: after-image cells (anything upserted) + before-image
     # cells (rows leaving a cell via update-move or delete). <= 2*nlist
     # small ints — a driver-safe collect, same pattern as the merge store.
-    after_cells = (
-        batch_df.where(F.col(op_col) != "delete")
-        .select(ivf_assign(F.col(vec_col), centroids).alias("c"))
-    )
-    cells = after_cells
+    cells = upserts.select(F.col(CELL_COL).alias("c"))
     if has_old_image:
         movers = batch_df.where(F.col(op_col).isin(*moving_ops))
         # A NULL before image on a moving op is as fatal as a missing
@@ -181,48 +186,19 @@ def apply_changelog_ivf(
             ivf_assign(F.col(before_vec), centroids).alias("c")
         )
         cells = cells.unionByName(old_cells)
-    touched = [r[0] for r in cells.distinct().collect() if r[0] is not None]
+    touched = touched_partitions(cells, F.col("c"))
     if not touched:
-        if batch_id is not None:
-            _hadoop_write_text(spark, _marker_path(index_path, batch_id), "done")
         return
-
     target = (
         spark.read.parquet(index_path)
         .where(F.col(CELL_COL).isin(touched))  # partition-pruned read
-        .drop(CELL_COL)
     )
     merged = apply_changelog(
         target, batch_df, key=[id_col], seq_col=seq_col, op_col=op_col
     )
-    merged_cells = merged.withColumn(CELL_COL, ivf_assign(F.col(vec_col), centroids))
-
-    # Stage first: the merged plan lazily reads the very files the dynamic
-    # overwrite replaces (self-overwrite), same as the bucketed merge store.
-    staging = index_path.rstrip("/") + ".stage-" + uuid.uuid4().hex
-    merged_cells.write.partitionBy(CELL_COL).parquet(staging)
-    try:
-        present = {
-            int(d.split("=", 1)[1])
-            for d in _hadoop_list_dirs(spark, staging)
-            if d.startswith(CELL_COL + "=")
-        }
-        if present:
-            (
-                spark.read.parquet(staging)
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(CELL_COL)
-                .parquet(index_path)
-            )
-        # Dynamic overwrite cannot write an EMPTY partition: a cell whose
-        # rows were all deleted keeps its stale files — drop the directory.
-        for c in set(touched) - present:
-            _hadoop_delete(spark, index_path.rstrip("/") + f"/{CELL_COL}={c}")
-    finally:
-        _hadoop_delete(spark, staging)
-    if batch_id is not None:
-        _hadoop_write_text(spark, _marker_path(index_path, batch_id), "done")
+    # The merged plan lazily reads the very cells it replaces; the swap
+    # stages it in full before renaming any cell.
+    replace_partitions(spark, index_path, CELL_COL, touched, merged)
 
 
 def _apply_ivf_mor(
@@ -234,7 +210,6 @@ def _apply_ivf_mor(
     NO before image needed (the tombstone shadows the old row in whatever
     cell it lives, which is exactly the information the COW path had to
     reconstruct from ``before_<vec>``)."""
-    from siddhi_io_cdc_spark.operators.mutate import rekey_deletes
     from siddhi_io_cdc_spark.streaming.mor import (
         latest_per_key, maybe_autocompact, mor_append, mor_begin_apply,
         mor_live,

@@ -138,15 +138,13 @@ import json
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from siddhi_io_cdc_spark.functions.similarity import (
-    _hadoop_read_text,
-    _hadoop_write_text,
-)
-from siddhi_io_cdc_spark.streaming.ivf_index import (
+from siddhi_io_cdc_spark.util import (
     _fs,
     _hadoop_delete,
     _hadoop_exists,
     _hadoop_list_dirs,
+    _hadoop_read_text,
+    _hadoop_write_text,
 )
 
 MOR_META = "_mor.json"

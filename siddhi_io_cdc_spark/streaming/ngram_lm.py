@@ -60,15 +60,17 @@ from siddhi_io_cdc_spark.functions.export import (
     _kn_lm,
     _kn_lower_orders,
 )
-from siddhi_io_cdc_spark.functions.similarity import (
-    _hadoop_read_text,
-    _hadoop_write_text,
+from siddhi_io_cdc_spark.operators.mutate import (
+    recover_partitions,
+    replace_partitions,
+    touched_partitions,
 )
-from siddhi_io_cdc_spark.streaming.bm25_index import _merge_partitioned
-from siddhi_io_cdc_spark.streaming.ivf_index import (
+from siddhi_io_cdc_spark.streaming.ivf_index import _marker_path
+from siddhi_io_cdc_spark.util import (
     _hadoop_delete,
     _hadoop_exists,
-    _marker_path,
+    _hadoop_read_text,
+    _hadoop_write_text,
 )
 
 GBUCKET_COL = "gbucket"
@@ -250,6 +252,8 @@ def apply_changelog_ngram(
             spark, batch_df, base, n, nbuckets, doc_buckets, text_col,
             id_col, seq_col, op_col, batch_id, expect_epoch,
         )
+    recover_partitions(spark, base + "/grams")
+    recover_partitions(spark, base + "/docs")
     movers = batch_df.where(F.col(op_col).isin("update", "delete"))
     if before not in batch_df.columns:
         if movers.limit(1).count():
@@ -300,9 +304,7 @@ def apply_changelog_ngram(
         buckets = buckets.unionByName(
             old_tf.select(_gbucket(n, nbuckets).alias("b"))
         )
-    touched = sorted({
-        r[0] for r in buckets.distinct().collect() if r[0] is not None
-    })
+    touched = touched_partitions(buckets, F.col("b"))
 
     if touched:
         target = (
@@ -310,7 +312,7 @@ def apply_changelog_ngram(
             .where(F.col(GBUCKET_COL).isin(touched))
         )
         kept = target.join(F.broadcast(batch_ids), id_col, "left_anti")
-        _merge_partitioned(
+        replace_partitions(
             spark, base + "/grams", GBUCKET_COL, touched,
             kept.unionByName(new_tf),
         )
@@ -329,19 +331,14 @@ def apply_changelog_ngram(
         )
         .withColumn(DBUCKET_COL, _dbucket(id_col, doc_buckets))
     )
-    touched_d = [
-        r[0]
-        for r in batch_ids.select(
-            _dbucket(id_col, doc_buckets).alias("b")
-        ).distinct().collect()
-    ]
+    touched_d = touched_partitions(batch_ids, _dbucket(id_col, doc_buckets))
     if touched_d:
         dtarget = (
             spark.read.parquet(base + "/docs")
             .where(F.col(DBUCKET_COL).isin(touched_d))
         )
         dkept = dtarget.join(F.broadcast(batch_ids), id_col, "left_anti")
-        _merge_partitioned(
+        replace_partitions(
             spark, base + "/docs", DBUCKET_COL, touched_d,
             dkept.unionByName(new_roster),
         )

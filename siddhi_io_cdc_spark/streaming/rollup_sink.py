@@ -10,8 +10,9 @@ per-granularity tables continuously. Here the same contract is:
 Each micro-batch is aggregated to finest-tier **partials** (sum/count/
 min/max — all additive/idempotent-mergeable), then additively merged into a
 hash-bucketed parquet store: only the buckets the batch's groups hash into
-are read and rewritten (same partition-pruned layout as
-``operators.mutate.merge_into_bucketed_parquet``), so per-batch I/O is
+are read and swapped in, one file per bucket (the partition-pruned layout
+and commit of ``operators.mutate.merge_into_bucketed_parquet``, through
+``operators.mutate.replace_partitions``), so per-batch I/O is
 O(touched buckets + batch), never O(store). Coarser tiers are derived at
 read time by ``read_rollup`` — they re-aggregate the (already tiny) finest
 tier, mirroring how siddhi answers a range query from the right tier.
@@ -24,16 +25,19 @@ stream equivalence test pins store state == one-shot batch rollup.
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from siddhi_io_cdc_spark.operators.mutate import (
+    BUCKET_COL,
+    recover_partitions,
+    replace_partitions,
+    touched_partitions,
+)
 from siddhi_io_cdc_spark.plans.rollup import _check_granularities
-
-BUCKET_COL = "__bucket"
+from siddhi_io_cdc_spark.util import persisted
 
 _PARTIALS = ("__sum", "__cnt", "__min", "__max")
 
@@ -76,39 +80,32 @@ def merge_rollup_batch(
     bucket_expr = F.pmod(F.xxhash64(*[F.col(c) for c in group_cols]), F.lit(num_buckets))
 
     if not os.path.exists(store_path):
-        partials.withColumn(BUCKET_COL, bucket_expr).write.partitionBy(BUCKET_COL).parquet(
-            store_path
-        )
+        partials.withColumn(BUCKET_COL, bucket_expr).repartition(BUCKET_COL).write.partitionBy(
+            BUCKET_COL
+        ).parquet(store_path)
         return
 
-    touched = [r[0] for r in partials.select(bucket_expr.alias("b")).distinct().collect()]
-    existing = (
-        spark.read.parquet(store_path)
-        .where(F.col(BUCKET_COL).isin(touched))  # partition-pruned scan
-        .drop(BUCKET_COL)
-    )
-    merged = (
-        existing.unionByName(partials)
-        .groupBy(*group_cols)
-        .agg(
-            F.sum("__sum").cast("decimal(38,2)").alias("__sum"),
-            F.sum("__cnt").alias("__cnt"),
-            F.min("__min").alias("__min"),
-            F.max("__max").alias("__max"),
+    recover_partitions(spark, store_path)
+    with persisted(partials) as partials:
+        touched = touched_partitions(partials, bucket_expr)
+        existing = (
+            spark.read.parquet(store_path)
+            .where(F.col(BUCKET_COL).isin(touched))  # partition-pruned scan
+            .drop(BUCKET_COL)
         )
-    )
-    staging = store_path + ".stage-" + uuid.uuid4().hex
-    merged.withColumn(BUCKET_COL, bucket_expr).write.partitionBy(BUCKET_COL).parquet(staging)
-    try:
-        (
-            spark.read.parquet(staging)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(BUCKET_COL)
-            .parquet(store_path)
+        merged = (
+            existing.unionByName(partials)
+            .groupBy(*group_cols)
+            .agg(
+                F.sum("__sum").cast("decimal(38,2)").alias("__sum"),
+                F.sum("__cnt").alias("__cnt"),
+                F.min("__min").alias("__min"),
+                F.max("__max").alias("__max"),
+            )
         )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+        replace_partitions(
+            spark, store_path, BUCKET_COL, touched, merged.withColumn(BUCKET_COL, bucket_expr)
+        )
 
 
 def foreach_batch_rollup(

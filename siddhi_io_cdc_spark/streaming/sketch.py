@@ -49,15 +49,16 @@ import uuid
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from siddhi_io_cdc_spark.functions.sketch import cms_sketch, hll_registers
-from siddhi_io_cdc_spark.functions.text import TOKEN_RE
-from siddhi_io_cdc_spark.functions.similarity import (
-    _hadoop_read_text,
-    _hadoop_write_text,
+from siddhi_io_cdc_spark.functions.sketch import (
+    cms_sketch,
+    hll_registers,
 )
-from siddhi_io_cdc_spark.streaming.ivf_index import (
+from siddhi_io_cdc_spark.functions.text import TOKEN_RE
+from siddhi_io_cdc_spark.util import (
     _hadoop_delete,
     _hadoop_list_dirs,
+    _hadoop_read_text,
+    _hadoop_write_text,
 )
 
 _POINTER = "_current.json"

@@ -1,4 +1,4 @@
-"""Small shared DataFrame utilities."""
+"""Small shared DataFrame and filesystem utilities."""
 
 from __future__ import annotations
 
@@ -61,6 +61,87 @@ def cache_scope():
         _SCOPES.remove(scope)
         for df in scope:
             df.unpersist()
+
+
+@contextlib.contextmanager
+def persisted(df: DataFrame):
+    """Persist ``df`` for the block (a micro-batch scanned more than once is
+    then read from its source once) and unpersist it at exit."""
+    df = df.persist()
+    try:
+        yield df
+    finally:
+        df.unpersist()
+
+
+# Filesystem ops through the Hadoop FileSystem API: they resolve against the
+# session's Hadoop conf, so state can live on s3a:// / hdfs:// / local paths.
+
+
+def _fs(spark, path: str):
+    jvm = spark._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath, jvm
+
+
+def _hadoop_exists(spark, path: str) -> bool:
+    fs, hpath, _ = _fs(spark, path)
+    return fs.exists(hpath)
+
+
+def _hadoop_delete(spark, path: str) -> None:
+    fs, hpath, _ = _fs(spark, path)
+    fs.delete(hpath, True)
+
+
+def _hadoop_list_dirs(spark, path: str) -> list[str]:
+    fs, hpath, _ = _fs(spark, path)
+    if not fs.exists(hpath):
+        return []
+    return [
+        s.getPath().getName()
+        for s in fs.listStatus(hpath)
+        if s.isDirectory()
+    ]
+
+
+def _hadoop_write_text(spark, path: str, text: str) -> None:
+    """Write a small text file (builtin open() only handles the local
+    filesystem)."""
+    fs, hpath, _ = _fs(spark, path)
+    out = fs.create(hpath, True)
+    try:
+        out.write(bytearray(text.encode("utf-8")))
+    finally:
+        out.close()
+
+
+def _hadoop_read_text(spark, path: str) -> str:
+    """Read a small text file (companion of :func:`_hadoop_write_text`)."""
+    fs, hpath, jvm = _fs(spark, path)
+    stream = fs.open(hpath)
+    try:
+        # Read JVM-side: py4j passes byte[] buffers by VALUE, so the
+        # stream.read(buf) idiom silently returns nothing to Python.
+        return jvm.org.apache.commons.io.IOUtils.toString(
+            stream, jvm.java.nio.charset.StandardCharsets.UTF_8
+        )
+    finally:
+        stream.close()
+
+
+def _hadoop_renamer(spark, path: str):
+    """``rename(src, dst)`` on the FileSystem of ``path``, raising on
+    failure (``dst`` must not exist). The FileSystem and the Path class are
+    resolved once, so a loop of renames costs three JVM calls each."""
+    fs, _, jvm = _fs(spark, path)
+    hpath = jvm.org.apache.hadoop.fs.Path
+
+    def rename(src: str, dst: str) -> None:
+        if not fs.rename(hpath(src), hpath(dst)):
+            raise IOError(f"failed to rename {src} to {dst}")
+
+    return rename
 
 
 _AQE_LOCK = __import__("threading").Lock()

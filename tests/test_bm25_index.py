@@ -300,7 +300,7 @@ def test_stats_cache_is_exact_derived_state(spark, index_path):
     import json as _json
 
     from siddhi_io_cdc_spark.functions.similarity import _hadoop_read_text
-    from siddhi_io_cdc_spark.streaming.ivf_index import _hadoop_delete
+    from siddhi_io_cdc_spark.util import _hadoop_delete
 
     docs = _corpus(spark, DOCS)
     write_bm25_index(spark, docs, index_path, nbuckets=8, doc_buckets=4)

@@ -121,3 +121,60 @@ def test_default_merge_adapter_is_bucketed(spark, tmp_path):
 
     with pytest.raises(ValueError, match="layout"):
         foreach_batch_merge(spark, store, key=["k"], layout="nope")
+
+
+def test_poll_merge_stream_reads_each_row_once(spark, tmp_path):
+    """cdc-poll → foreach_batch_merge: the merge scans its micro-batch more
+    than once (touched buckets, then the merge), so it must read the source
+    once; the stream's summed numInputRows equals the rows landed."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from siddhi_io_cdc_spark.operators.mutate import foreach_batch_merge, read_bucketed_store
+    from siddhi_io_cdc_spark.sources.polling import register_cdc_poll
+
+    src, store = str(tmp_path / "tbl"), str(tmp_path / "store")
+    os.makedirs(src)
+
+    def land(lo, hi, op):
+        ids = list(range(lo, hi))
+        pq.write_table(
+            pa.table(
+                {
+                    "id": pa.array(ids, pa.int64()),
+                    "k": pa.array([i % 20 for i in ids], pa.int64()),
+                    "v": pa.array([float(i) for i in ids], pa.float64()),
+                    "operation": pa.array([op] * len(ids), pa.string()),
+                }
+            ),
+            os.path.join(src, f"p-{time.time_ns()}.parquet"),
+        )
+        return len(ids)
+
+    landed = land(0, 20, "insert")
+    register_cdc_poll(spark)
+    q = (
+        spark.readStream.format("cdc-poll")
+        .option("path", src)
+        .option("pollingColumn", "id")
+        .option("startFrom", "earliest")
+        .load()
+        .writeStream.foreachBatch(
+            foreach_batch_merge(spark, store, key=["k"], seq_col="id", num_buckets=4)
+        )
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(processingTime="300 milliseconds")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        landed += land(20, 50, "update")
+        q.processAllAvailable()
+        landed += land(50, 65, "update")
+        q.processAllAvailable()
+        read = sum(p["numInputRows"] for p in q.recentProgress)
+    finally:
+        q.stop()
+    state = {r.k: r.v for r in read_bucketed_store(spark, store).collect()}
+    assert state == {k: float(max(i for i in range(65) if i % 20 == k)) for k in range(20)}
+    assert read == landed == 65

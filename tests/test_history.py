@@ -129,6 +129,29 @@ def test_incremental_history_matches_one_shot(spark, tmp_path):
     assert len(got) == 6
 
 
+def test_incremental_history_empty_batch_is_noop(spark, tmp_path):
+    """A zero-row micro-batch after a non-empty one leaves the history
+    store unchanged (it used to fail schema inference on empty staging)."""
+    import os
+
+    from siddhi_io_cdc_spark.operators.history import merge_history_into_parquet
+
+    store = os.path.join(str(tmp_path), "hist")
+    batch = _changelog(spark)
+
+    def state():
+        return sorted(
+            (r.id, r.valid_from, r.v, r.valid_to, r.is_deleted, r.is_current)
+            for r in spark.read.parquet(store).collect()
+        )
+
+    merge_history_into_parquet(spark, store, batch, key=["id"], num_buckets=4)
+    before = state()
+    merge_history_into_parquet(spark, store, batch.where("false"), key=["id"], num_buckets=4)
+    assert state() == before
+    assert len(before) == 5
+
+
 def test_streaming_enrichment_against_history_store(spark, tmp_path):
     """E2E composition: a changelog stream maintains the history store via
     foreachBatch; a second (fact) stream enriches each micro-batch with

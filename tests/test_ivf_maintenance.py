@@ -122,7 +122,7 @@ def test_ivf_maintenance_replay_idempotent_and_marker(spark, tmp_path):
 
 
 def test_ivf_maintenance_crash_half_committed_converges(spark, tmp_path):
-    """Simulate a crash where the dynamic overwrite committed only SOME
+    """Simulate a crash where the partition swap committed only SOME
     touched cells (no marker): restore a subset of cell dirs from a
     pre-batch snapshot, replay, assert convergence to the fully-applied
     state."""
@@ -318,6 +318,60 @@ def test_ivf_maintenance_rejects_null_before_image(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="NULL"):
         apply_changelog_ivf(spark, path, bad)
+
+
+def test_ivf_maintenance_rejects_null_vector_upsert(spark, tmp_path):
+    """An upsert with a NULL vector has no cell; it must raise before
+    anything is written, not land outside the touched cells."""
+    path = str(tmp_path / "ivf")
+    write_ivf_index(_vecs(spark, 0, 50), path, nlist=NLIST)
+    snap = _state(spark, path)
+    bad = _changelog(
+        _vecs(spark, 50, 52).withColumn("embedding", F.lit(None).cast("array<float>"))
+    )
+    with pytest.raises(ValueError, match="NULL 'embedding'"):
+        apply_changelog_ivf(spark, path, bad)
+    assert _state(spark, path) == snap
+
+
+def test_ivf_maintenance_keeps_stored_cell_of_surviving_rows(spark, tmp_path):
+    """A stored row whose cell differs from ivf_assign of its vector (the
+    numpy build engine can put a near-tie vector one cell over) stays in
+    its stored cell when a batch rewrites that cell, and the cell
+    ivf_assign names for it is left alone."""
+    import shutil
+
+    path = str(tmp_path / "ivf")
+    write_ivf_index(_vecs(spark, 0, 100), path, nlist=NLIST)
+    cells = sorted(r.cell for r in spark.read.parquet(path).select("cell").distinct().collect())
+    home, other = cells[0], cells[1]
+    home_dir, other_dir = (os.path.join(path, f"cell={c}") for c in (home, other))
+    # Move the lowest id of `home` into `other`, as a near-tie build would.
+    home_rows = spark.read.parquet(home_dir)
+    moved_id = home_rows.agg(F.min("vec_id")).first()[0]
+    moved = spark.createDataFrame(
+        home_rows.where(F.col("vec_id") == moved_id).collect(), home_rows.schema
+    )
+    rest = str(tmp_path / "rest")
+    home_rows.where(F.col("vec_id") != moved_id).write.parquet(rest)
+    shutil.rmtree(home_dir)
+    os.rename(rest, home_dir)
+    moved.write.mode("append").parquet(other_dir)
+    snap = _state(spark, path)
+    home_files = sorted(os.listdir(home_dir))
+
+    # Insert one vector that ivf_assign places in `other` only.
+    probe = spark.read.parquet(other_dir).where(F.col("vec_id") != moved_id).limit(1)
+    ins = probe.select((F.col("vec_id") + 1000).alias("vec_id"), "embedding")
+    ins = spark.createDataFrame(ins.collect(), ins.schema)
+    apply_changelog_ivf(spark, path, _changelog(ins, ts=2), batch_id=1)
+
+    assert _state(spark, path) == snap | {
+        (r.vec_id, tuple(round(float(x), 5) for x in r.embedding)) for r in ins.collect()
+    }
+    stored = spark.read.parquet(path).where(F.col("vec_id") == moved_id).collect()
+    assert [r.cell for r in stored] == [other]
+    assert sorted(os.listdir(home_dir)) == home_files
 
 
 def test_rag_chunk_id_stride_overflow_raises(spark, tmp_path):

@@ -113,10 +113,16 @@ def test_bucketed_merge_rewrites_only_touched_partitions(spark, tmp_path):
         [(i, f"name{i}", "insert", 1) for i in range(100)],
         "id long, name string, operation string, ts_ms long",
     )
+
+    def one_file_per_bucket():
+        dirs = glob.glob(f"{target}/__bucket=*")
+        return all(len(glob.glob(f"{d}/*.parquet")) == 1 for d in dirs)
+
     merge_into_bucketed_parquet(spark, target, seed, key=["id"], num_buckets=8)
     table = spark.read.parquet(target)
     assert table.count() == 100
     assert len(glob.glob(f"{target}/__bucket=*")) > 1
+    assert one_file_per_bucket()
 
     before = {f: os.path.getmtime(f) for f in glob.glob(f"{target}/__bucket=*/*.parquet")}
     _time.sleep(0.05)
@@ -136,6 +142,16 @@ def test_bucketed_merge_rewrites_only_touched_partitions(spark, tmp_path):
         if f not in before or os.path.getmtime(f) != before[f]
     }
     assert len(changed_dirs) == 1  # partition-pruned: one bucket rewritten
+    assert one_file_per_bucket()
+
+    # A batch spread over every bucket still leaves one file per bucket.
+    wide = spark.createDataFrame(
+        [(i, f"v{i}", "update", 3) for i in range(0, 100, 3)],
+        "id long, name string, operation string, ts_ms long",
+    )
+    merge_into_bucketed_parquet(spark, target, wide, key=["id"], num_buckets=8)
+    assert spark.read.parquet(target).count() == 100
+    assert one_file_per_bucket()
 
 
 def test_bucketed_merge_delete_empties_bucket(spark, tmp_path):
@@ -153,6 +169,62 @@ def test_bucketed_merge_delete_empties_bucket(spark, tmp_path):
     )
     merge_into_bucketed_parquet(spark, target, wipe, key=["id"], num_buckets=4)
     assert spark.read.parquet(target).count() == 0
+
+
+def test_bucketed_merge_recovers_interrupted_partition_swap(spark, tmp_path):
+    """A kill mid-swap leaves one bucket parked in a ``.swap-*`` sibling and
+    a stale ``.stage-*`` sibling. Replaying the batch restores the parked
+    bucket before reading, converges to last-write-wins, and cleans up."""
+    import glob
+    import shutil
+
+    from siddhi_io_cdc_spark.operators.mutate import (
+        merge_into_bucketed_parquet,
+        read_bucketed_store,
+    )
+
+    target = os.path.join(str(tmp_path), "store")
+    schema = "id long, name string, operation string, ts_ms long"
+    seed = spark.createDataFrame([(i, f"n{i}", "insert", 1) for i in range(40)], schema)
+    merge_into_bucketed_parquet(spark, target, seed, key=["id"], num_buckets=4)
+    batch = spark.createDataFrame(
+        [(i, f"u{i}", "update", 2) for i in range(0, 40, 5)]
+        + [(i, None, "delete", 3) for i in range(1, 40, 10)]
+        + [(100, "new", "insert", 4)],
+        schema,
+    )
+
+    # The kill, rebuilt on disk: the swap (in bucket order) had put the
+    # batch's first bucket in place and moved the second live bucket to
+    # its .swap- sibling, but not yet its replacement in; later buckets
+    # still hold the pre-batch state. Another attempt's staging leaked.
+    pre = os.path.join(str(tmp_path), "pre_batch_copy")
+    shutil.copytree(target, pre)
+    merge_into_bucketed_parquet(spark, target, batch, key=["id"], num_buckets=4)
+    buckets = sorted(os.path.basename(d) for d in glob.glob(f"{target}/__bucket=*"))
+    assert len(buckets) == 4
+    for b in buckets[2:]:
+        shutil.rmtree(os.path.join(target, b))
+        shutil.copytree(os.path.join(pre, b), os.path.join(target, b))
+    shutil.rmtree(os.path.join(target, buckets[1]))
+    shutil.copytree(os.path.join(pre, buckets[1]), f"{target}.swap-deadbeef/{buckets[1]}")
+    shutil.copytree(os.path.join(pre, buckets[0]), f"{target}.stage-cafebabe/{buckets[0]}")
+    shutil.rmtree(pre)
+
+    merge_into_bucketed_parquet(spark, target, batch, key=["id"], num_buckets=4)
+
+    want = {i: f"n{i}" for i in range(40)}
+    want.update({i: f"u{i}" for i in range(0, 40, 5)})
+    for i in range(1, 40, 10):
+        del want[i]
+    want[100] = "new"
+    got = {r["id"]: r["name"] for r in read_bucketed_store(spark, target).collect()}
+    assert got == want
+    assert read_bucketed_store(spark, target).count() == len(want)
+    siblings = [
+        d for d in os.listdir(str(tmp_path)) if ".swap-" in d or ".stage-" in d
+    ]
+    assert siblings == []
 
 
 def test_apply_changelog_deletes_keyed_from_before_image(spark):

@@ -61,6 +61,20 @@ def test_merge_is_partition_pruned(spark, tmp_path):
     assert len(changed) == 1  # exactly the one touched bucket rewritten
 
 
+def test_empty_batch_leaves_store_unchanged(spark, tmp_path):
+    """A zero-row micro-batch after a non-empty one is a no-op, not a
+    schema-inference failure on an empty staging directory."""
+    store = str(tmp_path / "store")
+    gs = (10, 100)
+    batch = spark.range(0, 50).selectExpr(
+        "id AS t", "CAST(id % 3 AS STRING) AS k", "CAST(id % 7 AS DOUBLE) AS v"
+    )
+    merge_rollup_batch(spark, store, batch, "t", ["k"], "v", granularity=10)
+    before = _rollup_state(spark, store, gs)
+    merge_rollup_batch(spark, store, batch.where("false"), "t", ["k"], "v", granularity=10)
+    assert _rollup_state(spark, store, gs) == before == _batch_state(batch, gs)
+
+
 def test_streaming_cdc_poll_to_rollup_store(spark, tmp_path):
     tbl, store = str(tmp_path / "tbl"), str(tmp_path / "store")
     os.makedirs(tbl)
